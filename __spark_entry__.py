@@ -7682,7 +7682,7 @@ def ch_sql_asof_join_q(spark, sf_dir):
     """ASOF LEFT JOIN through the SQL frontend (reference ASOF
     strictness, src/Interpreters/joinDispatch.h): each view event picks
     the latest purchase at-or-before it.  The SQL form routes through
-    the bucketed asof_join operator.  Purchase timestamps are unique
+    the asof_join operator's window core.  Purchase timestamps are unique
     per user in the fixture, so the max-value disambiguation in the
     oracle is inert."""
     ev = _cat(spark, sf_dir).events

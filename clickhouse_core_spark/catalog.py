@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import _DEFAULT_CONF
+
 # Parquet TIMESTAMP(NANOS) columns arrive as long (see session.py
 # nanosAsLong); convert to µs-precision timestamps, truncating exactly
 # like DuckDB does, so oracle comparisons line up.
@@ -29,8 +31,8 @@ def _normalize_nanos(df: DataFrame, cols: tuple[str, ...] | None = None) -> Data
       to µs like DuckDB and build a timestamp;
     - parquet timestamp[us] without timezone → Spark TIMESTAMP_NTZ:
       cast to timestamp_ltz.  The session timezone is pinned UTC
-      (_RUNTIME_CONF), so the wall-clock values are preserved exactly
-      and match DuckDB's epoch(ts) semantics, while downstream code
+      (session._DEFAULT_CONF), so the wall-clock values are preserved
+      exactly and match DuckDB's epoch(ts) semantics, while downstream code
       (unix_micros, cast to double, window math) only has to handle the
       one LTZ type.
     """
@@ -57,33 +59,26 @@ STANDARD_TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
-# Runtime-settable SQL confs the engine depends on.  Applied on
-# whatever session we're handed (the driver builds its own session and
-# passes it to __spark_entry__.entry, so build-time conf in session.py
-# is not guaranteed to be present).
-_RUNTIME_CONF = {
-    # events.ts is parquet TIMESTAMP(NANOS): Spark errors on it unless
-    # read as long (we then truncate to µs like DuckDB does).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Deterministic timestamp values for the DuckDB oracle comparison.
-    "spark.sql.session.timeZone": "UTC",
-    # Arrow transfer for the pandas-based pipeline operators.
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Byte-sized AQE partition coalescing (see session.py r13/r14 note):
-    # runtime-settable, so the driver's vanilla session gets the same
-    # scale-adaptive reducer sizing the bench session has.  Reads the
-    # same env knobs as session.py so one override reaches both paths.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst":
-        os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes":
-        os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "8m"),
-}
+# Keys of session._DEFAULT_CONF that are runtime-settable and that the
+# engine depends on.  Applied on whatever session we're handed (the
+# driver builds its own session and passes it to __spark_entry__.entry,
+# so build-time conf from get_spark is not guaranteed to be present):
+# nanosAsLong reads events.ts, the UTC zone and Arrow serve the DuckDB
+# oracle and the pandas-based operators, and the two AQE keys give the
+# vanilla session the same byte-sized reducers as get_spark.
+_RUNTIME_CONF_KEYS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.session.timeZone",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+)
 
 
 def apply_runtime_conf(spark: SparkSession) -> None:
-    for k, v in _RUNTIME_CONF.items():
+    for k in _RUNTIME_CONF_KEYS:
         try:
-            spark.conf.set(k, v)
+            spark.conf.set(k, _DEFAULT_CONF[k])
         except Exception:
             pass  # immutable on this session build; assume preconfigured
 
@@ -158,10 +153,3 @@ class Catalog:
         ).createOrReplaceTempView("system_columns")
         spark.createDataFrame([(0,)], "dummy int") \
             .createOrReplaceTempView("system_one")
-
-
-def load_catalog(spark: SparkSession, base_dir: str, register: bool = True) -> Catalog:
-    cat = Catalog(spark, base_dir)
-    if register:
-        cat.register_all()
-    return cat

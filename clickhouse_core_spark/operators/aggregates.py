@@ -216,15 +216,6 @@ def sum_map(df: DataFrame, keys: Sequence[str], map_col: str,
     return _agg_map(df, keys, map_col, F.sum, alias)
 
 
-def sum_map_with_overflow(df: DataFrame, keys: Sequence[str], map_col: str,
-                          alias: str = "sum_map") -> DataFrame:
-    """sumMapWithOverflow (AggregateFunctionSumMap.h registration):
-    identical to sumMap except the result keeps the input value type
-    (wrapping on overflow) instead of widening — Spark longs already
-    wrap in non-ANSI mode, so this is sumMap by another name."""
-    return sum_map(df, keys, map_col, alias)
-
-
 def min_map(df: DataFrame, keys: Sequence[str], map_col: str,
             alias: str = "min_map") -> DataFrame:
     """minMap: element-wise min of map values per group (reference

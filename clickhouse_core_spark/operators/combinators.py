@@ -43,14 +43,6 @@ def agg_or_default(agg: AggFn, value: Column | str, default) -> Column:
     return F.coalesce(agg(v), F.lit(default))
 
 
-def agg_or_null(agg: AggFn, value: Column | str) -> Column:
-    """-OrNull: explicit NULL on empty set (Spark's default for most
-    aggregates; count is the exception — handled via nullif)."""
-    v = F.col(value) if isinstance(value, str) else value
-    out = agg(v)
-    return out
-
-
 def count_or_null(value: Column | str) -> Column:
     """countOrNull: NULL instead of 0 on empty input."""
     return F.nullif(F.count(value), F.lit(0))

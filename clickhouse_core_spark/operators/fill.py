@@ -88,108 +88,6 @@ def with_fill(
     return joined.orderBy(*partition, fill_col)
 
 
-def _fill_spine(df: DataFrame, fill_col: str, step=1,
-                from_val=None, to_val=None) -> DataFrame:
-    """One-column fill spine: the arithmetic progression of
-    ``fill_col`` over [from|min, to|max] — the single-column core of
-    FillingTransform's row generator."""
-    bounds = df.groupBy().agg(F.min(fill_col).alias("__lo"),
-                              F.max(fill_col).alias("__hi"))
-    dtype = df.schema[fill_col].dataType
-    if from_val is not None:
-        bounds = bounds.withColumn("__lo", F.lit(from_val).cast(dtype))
-    if to_val is not None:
-        bounds = bounds.withColumn("__hi", F.lit(to_val).cast(dtype))
-    ftype = dtype.simpleString()
-    if isinstance(step, str):
-        step_expr = F.expr(f"interval {step}")
-    else:
-        step_expr = F.lit(step)
-    if ftype in ("float", "double") or (not isinstance(step, str)
-                                        and float(step) != int(step)):
-        n = F.floor((F.col("__hi") - F.col("__lo")) / F.lit(step)) \
-            .cast("long")
-        return (bounds
-                .select("__lo", F.explode(
-                    F.sequence(F.lit(0).cast("long"), n)).alias("__i"))
-                .select((F.col("__lo") + F.col("__i") * F.lit(step))
-                        .cast(ftype).alias(fill_col)))
-    return bounds.select(
-        F.explode(F.sequence(F.col("__lo"), F.col("__hi"),
-                             step_expr)).alias(fill_col))
-
-
-def with_fill_multi(df: DataFrame, specs, prefix=(),
-                    order_all=None) -> DataFrame:
-    """Multi-key ``ORDER BY [p,] a WITH FILL, b WITH FILL STEP s`` —
-    reference FillingTransform fills each sort key's progression; with
-    several filled keys the generated rows form the cross product of
-    the per-key progressions.
-
-    ``specs``: sequence of (col, step, from_val, to_val, desc) for the
-    WITH FILL keys.  ``prefix``: (col, desc) pairs for non-filled sort
-    keys PRECEDING the first fill key — the reference restarts the fill
-    progression per equal-prefix group, so spines are generated per
-    distinct prefix.  ``order_all``: the full ORDER BY list as
-    (col, desc) pairs in original position, used for the final sort.
-
-    Two FillingTransform invariants (src/Processors/Transforms/
-    FillingTransform.h) are honored: every ORIGINAL row is preserved
-    even when its fill-column value is off the step grid or outside
-    FROM/TO (fill only ever inserts rows), and fills never leak across
-    prefix-group boundaries.  Non-spine columns of generated rows carry
-    NULL.  Scale: bounds are one partial-aggregatable groupBy; the
-    spine grid is tiny (one row per step per group) so both the left
-    join and the anti join broadcast it — never a per-row loop.
-    """
-    prefix = list(prefix)
-    pcols = [c for c, _d in prefix]
-    fill_cols = [s[0] for s in specs]
-
-    aggs = []
-    for col, _s, _f, _t, _d in specs:
-        aggs += [F.min(col).alias(f"__lo_{col}"),
-                 F.max(col).alias(f"__hi_{col}")]
-    bounds = (df.groupBy(*pcols) if pcols else df.groupBy()).agg(*aggs)
-
-    spine = bounds
-    for col, step, fv, tv, _desc in specs:
-        step = step if step is not None else 1
-        dtype = df.schema[col].dataType
-        ftype = dtype.simpleString()
-        lo = (F.lit(fv).cast(dtype) if fv is not None
-              else F.col(f"__lo_{col}"))
-        hi = (F.lit(tv).cast(dtype) if tv is not None
-              else F.col(f"__hi_{col}"))
-        if isinstance(step, str):
-            spine = spine.withColumn(col, F.explode(
-                F.sequence(lo, hi, F.expr(f"interval {step}"))))
-        elif ftype in ("float", "double") or float(step) != int(step):
-            n = F.floor((hi - lo) / F.lit(step)).cast("long")
-            spine = (spine
-                     .withColumn("__i", F.explode(
-                         F.sequence(F.lit(0).cast("long"), n)))
-                     .withColumn(col, (lo + F.col("__i")
-                                       * F.lit(step)).cast(ftype))
-                     .drop("__i"))
-        else:
-            spine = spine.withColumn(col, F.explode(
-                F.sequence(lo, hi, F.lit(int(step)))))
-    spine = spine.select(*pcols, *fill_cols)
-
-    keys = pcols + fill_cols
-    joined = spine.join(df, on=keys, how="left")
-    # preserve originals the grid missed (off-step / outside FROM..TO)
-    missing = df.join(spine, on=keys, how="left_anti")
-    result = joined.unionByName(missing.select(*joined.columns))
-
-    if order_all is None:
-        order_all = prefix + [(c, d) for c, _s, _f, _t, d in specs]
-    order = [F.col(c).desc() if d else F.col(c).asc()
-             for c, d in order_all]
-    return result.orderBy(*order)
-
-
 # --------------------------------------------------------------------
 # Reference-faithful FillingTransform
 # (src/Processors/Transforms/FillingTransform.h, FillingRow.cpp)

@@ -9,10 +9,14 @@ reference src/Interpreters/PasteJoin.h:20.
 
 Spark-first implementations:
 
-- ``asof_join``: union + window ``last(ignorenulls)`` rewrite — a single
-  shuffle on the equi-keys, scales to arbitrarily large both-sides (no
-  pandas ``merge_asof``, no broadcast requirement, no per-group driver
-  loop). Handles all four inequalities (>=, >, <=, <).
+- ``asof_join`` / ``asof_join_same_source``: one window core — the
+  right row packed into a struct, one running ``last`` (ignorenulls)
+  per equi-key — over a side-tagged frame that is either a union of two
+  selects or one select over one scan.  A single shuffle on the
+  equi-keys, scales to arbitrarily large both-sides (no pandas
+  ``merge_asof``, no broadcast requirement, no per-group driver loop).
+  Handles all four inequalities (>=, >, <=, <); NULL keys and NULL
+  timestamps never match.
 - ``any_join``: right side deduplicated to one row per key with a
   deterministic tie-break, then a plain equi-join.
 - ``array_join``: explode / explode_outer (+ positions) over one or more
@@ -27,8 +31,56 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _ASOF_INEQUALITIES = (">=", ">", "<=", "<")
+_LEFT_SIDE = 1
+
+
+def _asof_right_side(inequality: str, how: str) -> int:
+    """Validate the ASOF arguments and return the right rows' side tag.
+    At equal ts a right row must sort BEFORE the left row (tag 0) for
+    the inclusive inequalities, so the running ``last`` sees it, and
+    AFTER it (tag 2) for the strict ones, so it does not."""
+    if inequality not in _ASOF_INEQUALITIES:
+        raise ValueError(f"inequality must be one of {_ASOF_INEQUALITIES}")
+    if how not in ("inner", "left"):
+        raise ValueError("how must be 'inner' or 'left'")
+    return 2 if inequality in (">", "<") else 0
+
+
+def _asof_can_match(on: Sequence[str], ts: str) -> Column:
+    """Right rows that can match at all: SQL equality never holds for a
+    NULL equi-key, nor an inequality for a NULL ts."""
+    cond = F.col(ts).isNotNull()
+    for k in on:
+        cond = cond & F.col(k).isNotNull()
+    return cond
+
+
+def _asof_match(tagged: DataFrame, on: Sequence[str],
+                left_cols: Sequence[str], inequality: str,
+                how: str) -> DataFrame:
+    """The one ASOF core, over a side-tagged frame with columns
+    ``*on, __asof_ts, __side, *left_cols, __r``.  ``__r`` packs a right
+    row's values into one struct (NULL on left rows), so a single
+    running ``last`` of ``__r`` (ignorenulls) per equi-key, ordered by
+    (ts, side), attaches one whole right row to each left row.  For
+    ``<=``/``<`` (nearest *future* right row) the ts order is reversed
+    instead of negating timestamps.  NULL ts sorts first either way, so
+    a left row with a NULL ts sees no right row."""
+    ts = F.col("__asof_ts")
+    ts_order = (ts.asc_nulls_first() if inequality in (">=", ">")
+                else ts.desc_nulls_first())
+    w = (Window.partitionBy(*on).orderBy(ts_order, F.col("__side"))
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    keep = F.col("__side") == _LEFT_SIDE
+    if how == "inner":
+        keep = keep & F.col("__r").isNotNull()
+    return (tagged.select(*on, *left_cols, "__side",
+                          F.last("__r", ignorenulls=True).over(w).alias("__r"))
+            .filter(keep)
+            .select(*on, *left_cols, "__r.*"))
 
 
 def asof_join(
@@ -45,79 +97,33 @@ def asof_join(
     equi-keys and the nearest ``right_ts`` satisfying
     ``left_ts <inequality> right_ts``.
 
-    Implementation (scale-first): tag both sides, union, and take a
-    running ``last(..., ignorenulls=True)`` over a window partitioned by
-    the equi-keys and ordered by (ts, side).  One shuffle on ``on``;
-    no assumption that either side fits in memory.  For ``<=``/``<``
-    (nearest *future* right row) the ordering is reversed instead of
-    negating timestamps, so the same machinery serves all four
-    inequalities.
+    Implementation (scale-first): tag both sides, union, and run the
+    shared window core (:func:`_asof_match`).  One shuffle on ``on``;
+    no assumption that either side fits in memory.
 
     ``how``: 'inner' drops left rows with no match, 'left' keeps them
-    with nulls (reference ASOF LEFT JOIN).
+    with nulls (reference ASOF LEFT JOIN).  NULL keys and NULL
+    timestamps never match; among right rows tied at the nearest ts,
+    which one is kept is unspecified.
     """
-    if inequality not in _ASOF_INEQUALITIES:
-        raise ValueError(f"inequality must be one of {_ASOF_INEQUALITIES}")
-    if how not in ("inner", "left"):
-        raise ValueError("how must be 'inner' or 'left'")
+    right_side = _asof_right_side(inequality, how)
     right_ts = right_ts or left_ts
     on = list(on)
     if right_values is None:
         right_values = [c for c in right.columns if c not in on and c != right_ts]
-
-    backward = inequality in (">=", ">")   # nearest right at-or-before left
-    strict = inequality in (">", "<")
-
-    # Side tag: the right row must sort BEFORE the left row at equal ts
-    # for the inclusive variants (so it is visible in the running
-    # last()), and AFTER it for strict variants (so it is not).
-    right_side = 0 if not strict else 2
-    LEFT_SIDE = 1
-
-    ts_out = "__asof_ts"
-    rows = []
-    l_tagged = left.withColumn(ts_out, F.col(left_ts)).withColumn("__side", F.lit(LEFT_SIDE))
-    for v in right_values:
-        l_tagged = l_tagged.withColumn(f"__r_{v}", F.lit(None).cast(right.schema[v].dataType))
-    rows.append(l_tagged.select(*on, ts_out, "__side",
-                                *[c for c in left.columns if c not in on],
-                                *[f"__r_{v}" for v in right_values]))
-
-    r_tagged = right.withColumn(ts_out, F.col(right_ts)).withColumn("__side", F.lit(right_side))
-    for c in left.columns:
-        if c not in on:
-            r_tagged = r_tagged.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-    for v in right_values:
-        r_tagged = r_tagged.withColumn(f"__r_{v}", F.col(v))
-    rows.append(r_tagged.select(*on, ts_out, "__side",
-                                *[c for c in left.columns if c not in on],
-                                *[f"__r_{v}" for v in right_values]))
-
-    unioned = rows[0].unionByName(rows[1])
-
-    order = [F.col(ts_out), F.col("__side")]
-    if not backward:
-        order = [F.col(ts_out).desc(), F.col("__side")]
-    w = (Window.partitionBy(*on).orderBy(*order)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-
-    matched = unioned
-    for v in right_values:
-        matched = matched.withColumn(f"__r_{v}", F.last(f"__r_{v}", ignorenulls=True).over(w))
-
-    out = (matched.filter(F.col("__side") == LEFT_SIDE)
-           .drop("__side", ts_out))
-    for v in right_values:
-        out = out.withColumnRenamed(f"__r_{v}", v)
-    if how == "inner":
-        # A left row with no visible right row has all-null right values.
-        cond = None
-        for v in right_values:
-            c = F.col(v).isNotNull()
-            cond = c if cond is None else (cond | c)
-        if cond is not None:
-            out = out.filter(cond)
-    return out
+    left_cols = [c for c in left.columns if c not in on]
+    r_type = T.StructType([right.schema[v] for v in right_values])
+    l_tagged = left.select(
+        *on, F.col(left_ts).alias("__asof_ts"),
+        F.lit(_LEFT_SIDE).alias("__side"), *left_cols,
+        F.lit(None).cast(r_type).alias("__r"))
+    r_tagged = right.filter(_asof_can_match(on, right_ts)).select(
+        *on, F.col(right_ts).alias("__asof_ts"),
+        F.lit(right_side).alias("__side"),
+        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols],
+        F.struct(*right_values).alias("__r"))
+    return _asof_match(l_tagged.unionByName(r_tagged), on, left_cols,
+                       inequality, how)
 
 
 def asof_join_same_source(
@@ -131,9 +137,9 @@ def asof_join_same_source(
     inequality: str = ">=",
     how: str = "inner",
 ) -> DataFrame:
-    """ASOF join whose two sides are DISJOINT filters of the SAME
-    DataFrame — the common event-log case (purchases vs clicks of one
-    events table).  Semantically identical to
+    """ASOF join whose two sides are filters of the SAME DataFrame — the
+    common event-log case (purchases vs clicks of one events table).
+    Same answer as
     ``asof_join(df.filter(left_filter)…, df.filter(right_filter)…)``
     but built from ONE scan: the generic form reads the source twice
     (one FileScan per side) before unioning; here rows are side-tagged
@@ -143,56 +149,27 @@ def asof_join_same_source(
     row-identical).
 
     ``left_values`` / ``right_values`` map output column name → source
-    column; left outputs are NULL on right rows and vice versa, and the
-    same running ``last(ignorenulls)`` window as :func:`asof_join`
-    attaches the nearest right row.  Filters MUST be disjoint (a row
-    matching both would be tagged left only, where the union form
-    would duplicate it).
+    column; left outputs are NULL on right rows, the right outputs are
+    packed into the struct the shared window core (:func:`_asof_match`)
+    carries.  The filters may overlap: a row matching both is exploded
+    into one left row and one right row, as the union form has it.
     """
-    if inequality not in _ASOF_INEQUALITIES:
-        raise ValueError(f"inequality must be one of {_ASOF_INEQUALITIES}")
-    if how not in ("inner", "left"):
-        raise ValueError("how must be 'inner' or 'left'")
+    right_side = _asof_right_side(inequality, how)
     on = list(on)
-    backward = inequality in (">=", ">")
-    strict = inequality in (">", "<")
-    LEFT_SIDE = 1
-    right_side = 0 if not strict else 2  # see asof_join's tag rationale
-
-    both = df.filter(left_filter | right_filter)
-    is_left = left_filter
-    cols = [*on,
-            F.col(ts_col).alias("__asof_ts"),
-            F.when(is_left, F.lit(LEFT_SIDE)).otherwise(F.lit(right_side))
-            .alias("__side")]
-    cols += [F.when(is_left, F.col(src)).alias(out)
-             for out, src in left_values.items()]
-    cols += [F.when(~is_left, F.col(src)).alias(f"__r_{out}")
-             for out, src in right_values.items()]
-    unioned = both.select(*cols)
-
-    order = [F.col("__asof_ts"), F.col("__side")]
-    if not backward:
-        order = [F.col("__asof_ts").desc(), F.col("__side")]
-    w = (Window.partitionBy(*on).orderBy(*order)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-
-    matched = unioned
-    for out in right_values:
-        matched = matched.withColumn(
-            f"__r_{out}", F.last(f"__r_{out}", ignorenulls=True).over(w))
-    out_df = (matched.filter(F.col("__side") == LEFT_SIDE)
-              .drop("__side", "__asof_ts"))
-    for out in right_values:
-        out_df = out_df.withColumnRenamed(f"__r_{out}", out)
-    if how == "inner":
-        cond = None
-        for out in right_values:
-            c = F.col(out).isNotNull()
-            cond = c if cond is None else (cond | c)
-        if cond is not None:
-            out_df = out_df.filter(cond)
-    return out_df
+    is_right = right_filter & _asof_can_match(on, ts_col)
+    sides = F.array(F.when(left_filter, F.lit(_LEFT_SIDE)),
+                    F.when(is_right, F.lit(right_side)))
+    is_left = F.col("__side") == _LEFT_SIDE
+    tagged = (df.filter(left_filter | right_filter)
+              .withColumn("__side", F.explode(F.array_compact(sides)))
+              .select(*on, F.col(ts_col).alias("__asof_ts"), "__side",
+                      *[F.when(is_left, F.col(src)).alias(out)
+                        for out, src in left_values.items()],
+                      F.when(~is_left, F.struct(
+                          *[F.col(src).alias(out)
+                            for out, src in right_values.items()]))
+                      .alias("__r")))
+    return _asof_match(tagged, on, list(left_values), inequality, how)
 
 
 def any_join(

@@ -9144,13 +9144,6 @@ def _match_order_fill(text: str):
             fsettings)
 
 
-def _fill_literal(tok: str | None):
-    if tok is None:
-        return None
-    f = float(tok)
-    return int(f) if f.is_integer() else f
-
-
 _SCALAR_WITH_RE = re.compile(r"^\s*WITH\s+", re.IGNORECASE)
 
 
@@ -9430,9 +9423,9 @@ def _rewrite_any_join(sql: str) -> str:
 def _rewrite_asof_join(spark, sql: str) -> str:
     """``FROM a ASOF [LEFT] JOIN b ON a.k = b.k AND a.ts >= b.ts``
     (reference ASOF strictness, src/Interpreters/joinDispatch.h) — the
-    matched section is executed through operators.asof_join (bucketed
-    equi-join, never a range join) and re-registered as a temp view the
-    remaining SQL selects from."""
+    matched section is executed through operators.asof_join (one window
+    over the equi-keys, never a range join) and re-registered as a temp
+    view the remaining SQL selects from."""
     m = _ASOF_RE.search(sql)
     if m is None:
         return sql

@@ -50,10 +50,6 @@ def _span_seconds(text: str) -> float | None:
     return float(m.group(1)) * _TIMESPAN_SECONDS[m.group(2)]
 
 
-def _sql_quote(lit: str) -> str:
-    return "'" + lit.replace("'", "''") + "'"
-
-
 def _sql_quote_regex(pat: str) -> str:
     # Spark SQL string literals process backslash escapes; double them
     # so \b etc. reach the regex engine intact

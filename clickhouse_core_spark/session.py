@@ -15,7 +15,10 @@ from pyspark.sql import SparkSession
 
 # Defaults tuned for the local[32] test harness; on a real cluster the
 # same knobs scale out (AQE coalesces/splits partitions at runtime, so a
-# static shuffle.partitions is only the pre-AQE upper bound).
+# static shuffle.partitions is only the pre-AQE upper bound).  The one
+# conf table: get_spark applies all of it at build time, and
+# catalog.apply_runtime_conf re-applies its runtime-settable keys on a
+# session built elsewhere (the driver's vanilla session).
 _DEFAULT_CONF = {
     # Adaptive execution: runtime re-planning, skew-join splitting and
     # small-partition coalescing — the moral equivalent of the

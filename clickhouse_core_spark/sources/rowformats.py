@@ -1068,9 +1068,3 @@ def _flat_ch_name(node, force_nullable: bool = False) -> str:
         return f"Array({_flat_ch_name(node[1], force_nullable)})"
     ch = node[2]
     return f"Nullable({ch})" if (node[3] or force_nullable) else ch
-
-
-def unify_object_ddl(vals) -> str | None:
-    """Spark DDL shortcut over :func:`object_type_tree`."""
-    tree = object_type_tree(vals)
-    return object_tree_ddl(tree) if tree else None
