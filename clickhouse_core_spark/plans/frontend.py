@@ -9568,9 +9568,6 @@ def clear_query_cache() -> None:
     _QUERY_CACHE.clear()
 
 
-_SQL_UDFS_DONE: set = set()
-
-
 def _rewrite_tuple_nvp(spark, text: str, tables) -> str:
     """tupleToNameValuePairs(t) → Array(Tuple(name, value))
     (reference src/Functions/tupleToNameValuePairs.cpp): named tuples
@@ -9691,11 +9688,12 @@ def _ensure_sql_udfs(spark) -> None:
     """Register the UDF-backed scalar names (MD4, keccak256, punycode,
     normalizeUTF8NF*, ...) as SQL functions once per session so CH-SQL
     text resolves them natively (reference: every function name is
-    SQL-callable, src/Functions/FunctionFactory.h)."""
-    key = id(spark)
-    if key in _SQL_UDFS_DONE:
+    SQL-callable, src/Functions/FunctionFactory.h).  The mark lives
+    on the session object itself: an ``id()`` can be reused by a later
+    session, which would then skip its registration."""
+    if getattr(spark, "_ch_sql_udfs_registered", False):
         return
-    _SQL_UDFS_DONE.add(key)
+    spark._ch_sql_udfs_registered = True
     try:
         from clickhouse_core_spark.functions.udf import (
             register_sql_scalar_udfs)
@@ -10238,15 +10236,23 @@ def _ch_sql_impl(spark, sql: str,
     if tables is not None and re.search(r"(?i)\bIN\b", text):
         # `x IN table_name` / `x IN (table_name)`: a bare table
         # reference is the whole-table SET (reference
-        # src/Interpreters/interpretSubquery — identifier-as-subquery)
+        # src/Interpreters/interpretSubquery — identifier-as-subquery).
+        # The catalog listing (several Spark jobs) runs only for a
+        # captured identifier that is not a session table name; an
+        # unquoted capture starting with a digit is a number literal.
         known = set(tables)
-        try:
-            known |= {t0.name for t0 in spark.catalog.listTables()}
-        except Exception:
-            pass
+        catalog_read = []
 
         def _in_tbl(m):
             nm = m.group(3).strip("`")
+            if nm not in known and not catalog_read \
+                    and (m.group(2) or not nm[:1].isdigit()):
+                catalog_read.append(True)
+                try:
+                    known.update(
+                        t0.name for t0 in spark.catalog.listTables())
+                except Exception:
+                    pass
             if nm in known:
                 return (f"{m.group(1) or ''}IN "
                         f"(SELECT * FROM `{nm}`)")
@@ -14474,12 +14480,10 @@ def _alter_table_statement(spark, name: str, body: str, tables):
             continue
         raise NotImplementedError(f"ALTER operation not mapped: "
                                   f"{o[:60]!r}")
-    df.createOrReplaceTempView(name)
-    if t is not None and hasattr(t, "_apply_engine"):
-        try:
-            t.read(final=True).createOrReplaceTempView(f"{name}__final")
-        except ValueError:
-            pass                      # part-less table; CREATE-time view stands
+    if hasattr(t, "_apply_engine"):
+        _refresh_table_views(spark, name, t, view=df)
+    else:
+        df.createOrReplaceTempView(name)
     _refresh_alias_views(spark, name, tables)
     return None
 
@@ -14517,18 +14521,40 @@ def _refresh_alias_views(spark, name: str, tables) -> None:
                 pass
 
 
-def _refresh_table_views(spark, name: str, t) -> None:
-    """Re-register the ``name`` / ``name__final`` temp views after a
-    mutation replaced part files (a stale view holds the old file
-    list)."""
+def _refresh_table_views(spark, name: str, t, view=None,
+                         order=()) -> None:
+    """Re-register the ``name`` / ``name__final`` temp views after an
+    INSERT, ALTER or mutation changed a MergeTree table's parts (a
+    stale view holds the old file list).  Both views come from one
+    ``read_raw`` build (``MergeTreeTable.read_views``).
+
+    - ``view``: the ALTER path's column-evolved frame, registered as
+      ``name`` as it is; only ``name__final`` is re-read.
+    - ``always_final`` tables (EmbeddedRocksDB key-value semantics)
+      expose the deduplicated state as ``name``.
+    - ``order``: the declared column order ``name`` keeps (hive
+      partition discovery appends partition columns last)."""
     if t is None or not hasattr(t, "_apply_engine"):
         return
     try:
-        t.read().createOrReplaceTempView(name)
-        t.read(final=True).createOrReplaceTempView(f"{name}__final")
-        return
+        if view is None:
+            view, final = t.read_views()
+            if getattr(t, "always_final", False):
+                view = final
+        else:
+            final = t.read(final=True)
     except ValueError:
-        pass                          # part-less after mutation
+        final = None                  # part-less
+    if view is not None:
+        declared = [c for c in order if c in view.columns]
+        if declared and view.columns != declared \
+                and set(declared) == set(view.columns):
+            view = view.select(*[F.col(f"`{c}`") for c in declared])
+        view.createOrReplaceTempView(name)
+        if final is not None:         # else part-less ALTER: the
+            # CREATE-time FINAL view stands
+            final.createOrReplaceTempView(f"{name}__final")
+        return
     # TRUNCATE / DELETE-all left zero parts: a stale view would die
     # FAILED_READ_FILE on the next SELECT (reference drops the data
     # but keeps the table readable as empty) — register an empty
@@ -14674,27 +14700,11 @@ def _append_to_table(spark, name: str, df, tables, _mv_depth: int = 0):
     if t is not None and hasattr(t, "insert"):
         _check_object_insert_compat(t, aligned)
         t.insert(aligned)
-        # always_final tables (EmbeddedRocksDB key-value semantics)
-        # expose the deduplicated state as THE table
-        view_df = (t.read(final=True)
-                   if getattr(t, "always_final", False) else t.read())
-        # hive partition discovery appends partition columns LAST;
-        # the view keeps the DECLARED column order
-        declared = [f.name for f in schema.fields
-                    if f.name in view_df.columns]
-        if declared and list(view_df.columns) != declared \
-                and set(declared) == set(view_df.columns):
-            view_df = view_df.select(
-                *[F.col(f"`{c}`") for c in declared])
-        view_df.createOrReplaceTempView(name)
         if hasattr(t, "_apply_engine"):
-            try:
-                # plain MergeTree FINAL is identity; engine variants
-                # get their merge semantics applied at read time
-                t.read(final=True) \
-                    .createOrReplaceTempView(f"{name}__final")
-            except ValueError:
-                pass                  # part-less (nothing inserted)
+            _refresh_table_views(spark, name, t,
+                                 order=[f.name for f in schema.fields])
+        else:
+            t.read().createOrReplaceTempView(name)
         # replica/Distributed alias views pin their creation-time
         # schema; a first INSERT that DEFINES the schema (schema-less
         # CREATE) must re-register them (byte_identical replicated

@@ -15,6 +15,14 @@ Spark mapping, feature for feature:
                ``partitionBy(partition_by)`` + ``sortWithinPartitions(order_by)``
                → Parquet row-group min/max stats on the sort key give the
                primary-index pruning analog for free at scan time;
+- columns.txt = the part's own column list (IMergeTreeDataPart), taken
+               once per table object from the Spark schema a part's
+               parquet footer carries and passed to every later scan of
+               that part, so a read never runs Spark's per-part schema
+               inference job; hive partition columns are still
+               discovered from the directory names at each scan, and a
+               part's entry is dropped when the part leaves the live set
+               or a partition slice moves in or out of it;
 - insert     = append a new part directory (atomic per-directory write);
 - FINAL      = view rewrite from operators/final.py;
 - merge      = ``compact()``: read all parts, apply the engine rewrite,
@@ -96,6 +104,22 @@ def _split_ddl_columns(ddl: str) -> list[str]:
     return out
 
 
+def _footer_schema(part: str) -> StructType | None:
+    """The Spark schema stored in the footer of one of ``part``'s data
+    files (all files of a part come from one write): the data columns
+    Spark's parquet inference reads from that same footer.  None when
+    the part has no data file or the file was not written by Spark."""
+    import pyarrow.parquet as pq
+    for root, dirs, files in os.walk(part):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                kv = pq.read_metadata(os.path.join(root, f)).metadata or {}
+                js = kv.get(b"org.apache.spark.sql.parquet.row.metadata")
+                return StructType.fromJson(json.loads(js)) if js else None
+    return None
+
+
 class MergeTreeTable:
     """A managed, partitioned, sort-clustered Parquet table with
     MergeTree engine semantics."""
@@ -162,6 +186,9 @@ class MergeTreeTable:
         # NULLs from the expression (which may reference other
         # inserted columns, the materialized-default contract)
         self.column_defaults = dict(column_defaults or {})
+        # live part path -> the data columns its files were written
+        # with (see _scan_part)
+        self._part_schemas: dict[str, StructType] = {}
         os.makedirs(path, exist_ok=True)
         self._write_meta()
 
@@ -206,6 +233,21 @@ class MergeTreeTable:
         return sorted(
             os.path.join(self.path, d) for d in os.listdir(self.path)
             if d.startswith("part-") and os.path.isdir(os.path.join(self.path, d)))
+
+    def _scan_part(self, part: str) -> DataFrame:
+        """One part's parquet scan, hive partition columns included.
+        The part's data columns (the reference's columns.txt) are read
+        once from the Spark schema in one data file's footer and passed
+        as the read schema from then on; Spark would otherwise launch
+        a schema-inference job on every scan.  Partition columns are
+        not in the saved schema, so Spark discovers them and their
+        types from the directory names as before."""
+        schema = self._part_schemas.get(part) or _footer_schema(part)
+        reader = self.spark.read.option("basePath", part)
+        if schema is not None:
+            self._part_schemas[part] = schema
+            reader = reader.schema(schema)
+        return reader.parquet(part)
 
     def insert(self, df: DataFrame,
                write_options: dict | None = None) -> str:
@@ -286,7 +328,7 @@ class MergeTreeTable:
         per indexed column, bloom-filtered on token.  One extra pass over
         the fresh part — the same write-time cost profile as the
         reference's index granule build."""
-        df = (self.spark.read.parquet(part_dir)
+        df = (self._scan_part(part_dir)
               .withColumn("__file", F.col("_metadata.file_path")))
         for col in self.token_index_cols:
             idx = (df.select(F.explode(self._tokenize(F.col(col)))
@@ -369,7 +411,7 @@ class MergeTreeTable:
         bounds = self._rowgroup_bounds(part_dir)
         bdf = self.spark.createDataFrame(
             bounds, "file string, rg int, row_start long, row_end long")
-        base = (self.spark.read.parquet(part_dir)
+        base = (self._scan_part(part_dir)
                 .select(F.col("_metadata.file_path").alias("file"),
                         F.col("_metadata.row_index").alias("row_index"),
                         *self.gin_index_cols))
@@ -535,8 +577,7 @@ class MergeTreeTable:
         if not parts:
             raise ValueError(f"table at {self.path} has no parts")
         if len(parts) == 1:
-            df = self.spark.read.option("basePath", parts[0]) \
-                .parquet(parts[0])
+            df = self._scan_part(parts[0])
             if with_seq:
                 df = df.withColumn("__part_seq", F.lit(0))
         else:
@@ -545,8 +586,7 @@ class MergeTreeTable:
             # as conflicting structures); unionByName tolerates
             # ALTER-evolved schemas, missing columns fill NULL and the
             # view layer applies declared DEFAULTs
-            dfs = [self.spark.read.option("basePath", p).parquet(p)
-                   for p in parts]
+            dfs = [self._scan_part(p) for p in parts]
             # delete masks anti-join on _metadata, which only resolves
             # on a DIRECT file-scan relation — apply per part BEFORE
             # the union (golden 02864: INSERT after a lightweight
@@ -630,13 +670,25 @@ class MergeTreeTable:
     def read(self, final: bool = False) -> DataFrame:
         if not final or self.engine == "merge_tree":
             return self._wrap_object_cols(self.read_raw())
+        return self._wrap_object_cols(
+            self._final(self.read_raw(with_seq=True)))
+
+    def read_views(self) -> tuple[DataFrame, DataFrame]:
+        """``(read(), read(final=True))`` from one ``read_raw`` build —
+        what a view refresh registers as ``name`` and ``name__final``."""
+        raw = self.read_raw(with_seq=True)
+        plain = self._wrap_object_cols(raw.drop("__part_seq"))
+        if self.engine == "merge_tree":
+            return plain, plain
+        return plain, self._wrap_object_cols(self._final(raw))
+
+    def _final(self, raw: DataFrame) -> DataFrame:
+        """The engine's FINAL over ``read_raw(with_seq=True)``."""
         if self.engine == "replacing":
             # part-recency tiebreak for equal versions (the
             # reference keeps the last row in the selection)
-            out = self._apply_engine(self.read_raw(with_seq=True))
-            return self._wrap_object_cols(out.drop("__part_seq"))
-        return self._wrap_object_cols(self._apply_engine(
-            self.read_raw()))
+            return self._apply_engine(raw).drop("__part_seq")
+        return self._apply_engine(raw.drop("__part_seq"))
 
     def _wrap_object_cols(self, df: DataFrame) -> DataFrame:
         """Deprecated ``Object('json')`` columns finalize to the
@@ -752,7 +804,7 @@ class MergeTreeTable:
         (append mode) across successive lightweight deletes."""
         cond = F.coalesce(predicate, F.lit(False))
         for part in self.parts():
-            hits = (self.spark.read.parquet(part)
+            hits = (self._scan_part(part)
                     .withColumn("__file", F.col("_metadata.file_path"))
                     .withColumn("__row", F.col("_metadata.row_index"))
                     .filter(cond)
@@ -769,7 +821,10 @@ class MergeTreeTable:
                              os.walk(self._mask_dir(p)) for f in fs)]
         if not mask_dirs:
             return None
-        return self.spark.read.parquet(*mask_dirs)
+        # the sidecar is this module's own (file, row) pair write: a
+        # fixed schema skips Spark's schema-inference job
+        return self.spark.read.schema("__file string, __row long") \
+            .parquet(*mask_dirs)
 
     def _apply_delete_masks(self, df: DataFrame,
                             parts: Sequence[str]) -> DataFrame:
@@ -884,6 +939,7 @@ class MergeTreeTable:
                              f"(reference NO_SUCH_DATA_PART)")
         shutil.move(p, os.path.join(self._detached_dir(),
                                     os.path.basename(p)))
+        self._part_schemas.pop(p, None)
 
     def attach_part(self, name: str) -> None:
         """ALTER TABLE ... ATTACH PART 'name': restore a detached
@@ -914,9 +970,10 @@ class MergeTreeTable:
                     os.makedirs(dst, exist_ok=True)
                     shutil.move(d, os.path.join(
                         dst, f"{plain[0]}={value}"))
+                    self._part_schemas.pop(part, None)
                 if not any(e.name.startswith(f"{plain[0]}=")
                            for e in os.scandir(part) if e.is_dir()):
-                    shutil.rmtree(part, ignore_errors=True)
+                    self._drop_parts([part])
             return
         # expression partition keys: split the slice out as a new
         # detached part, rewrite the remainder
@@ -951,6 +1008,7 @@ class MergeTreeTable:
                 os.makedirs(dst, exist_ok=True)
                 shutil.move(d, os.path.join(
                     dst, f"{plain[0]}={value}"))
+                self._part_schemas.pop(dst, None)
                 if not any(x.is_dir() for x in os.scandir(e.path)):
                     shutil.rmtree(e.path, ignore_errors=True)
             else:
@@ -1049,6 +1107,7 @@ class MergeTreeTable:
         import shutil
         for p in parts:
             shutil.rmtree(p, ignore_errors=True)
+            self._part_schemas.pop(p, None)
 
     # ------------------------------------------------ partition ops
 
@@ -1077,11 +1136,12 @@ class MergeTreeTable:
                 d = os.path.join(part, f"{plain[0]}={value}")
                 if os.path.isdir(d):
                     shutil.rmtree(d, ignore_errors=True)
+                    self._part_schemas.pop(part, None)
                 # a part whose every hive slice is gone is itself gone
                 if not any(
                         e.name.startswith(f"{plain[0]}=")
                         for e in os.scandir(part) if e.is_dir()):
-                    shutil.rmtree(part, ignore_errors=True)
+                    self._drop_parts([part])
             return
         old = self.parts()
         if not old:
